@@ -63,16 +63,16 @@ object DevRound5Probe {
       }
     if (ops("coloring_ldf"))
       timed("jones_plassmann_ldf") {
-        val (df, rounds) = graft.algos.Coloring.run(raw, 256, 42L,
+        val res = graft.algos.Coloring.run(raw, 256, 42L,
           largestFirst = true)
-        val colors = df.groupBy(col("color")).count()
+        val colors = res.state.groupBy(col("color")).count()
           .orderBy(col("color")).collect().length
-        s"colors=$colors rounds=$rounds"
+        s"colors=$colors rounds=${res.supersteps}"
       }
     if (ops("mis"))
       timed("luby_mis") {
-        val (df, rounds) = graft.algos.Mis.run(raw)
-        s"mis_size=${df.count()} rounds=$rounds"
+        val res = graft.algos.Mis.run(raw)
+        s"mis_size=${res.state.count()} rounds=${res.supersteps}"
       }
     if (ops("linkpred"))
       // the gate query's cap-64 semantics at scale: candidate volume is

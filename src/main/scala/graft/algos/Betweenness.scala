@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.LinkGraph
+import graft.engine.{LocalStore, Superstep}
 
 /** Distance-bounded Brandes betweenness centrality from a landmark set —
   * the standard sampled approximation (Brandes & Pich 2007) with the
@@ -43,64 +44,61 @@ object Betweenness {
     val und = LinkGraph.undirected(edges).select("src", "dst").distinct()
       .repartition(parts, col("src")).sortWithinPartitions("src")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    und.count()
-
-    // ---- forward: per-level frontiers with path counts ------------------
-    var reached = seeds.select(col("id").as("seed"), col("id"),
-      lit(0).as("dist"), lit(1L).as("sigma")).localCheckpoint(true)
-    var frontier = reached
-    val levels = scala.collection.mutable.ArrayBuffer(frontier)
-    var t = 1
-    var done = false
-    while (t <= maxT && !done) {
-      val cand = frontier.join(und, frontier("id") === und("src"))
-        .groupBy(col("seed"), und("dst").as("vid"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .select(col("seed"), col("vid").as("id"), col("sigma"))
-      val newly = cand
-        .join(reached.select("seed", "id"), Seq("seed", "id"), "left_anti")
-        .withColumn("dist", lit(t))
-        .select("seed", "id", "dist", "sigma").localCheckpoint(true)
-      done = newly.isEmpty
-      if (!done) {
-        reached = reached.unionByName(newly).localCheckpoint(true)
-        frontier = newly
-        levels += newly
+    try {
+      // ---- forward: per-level frontiers with path counts ------------------
+      // state (seed, id, dist, sigma, delta): delta = 1.0 for the pairs first
+      // reached last round — the level being expanded
+      val init = seeds.select(col("id").as("seed"), col("id"),
+        lit(0).as("dist"), lit(1L).as("sigma"), lit(1.0).as("delta"))
+      def step(state: DataFrame, t: Int): DataFrame = {
+        val frontier = state.filter(col("delta") > 0)
+        val cand = frontier.join(und, frontier("id") === und("src"))
+          .groupBy(col("seed"), und("dst").as("id"))
+          .agg(sum(col("sigma")).as("nsigma"))
+        state.join(cand, Seq("seed", "id"), "full_outer")
+          .select(col("seed"), col("id"),
+            coalesce(col("dist"), lit(t)).as("dist"),
+            coalesce(col("sigma"), col("nsigma")).as("sigma"),
+            when(col("dist").isNull, 1.0).otherwise(0.0).as("delta"))
       }
-      t += 1
-    }
+      val res = Superstep.run(init, step, tol = 0.0, maxIters = maxT,
+        new LocalStore)
+      // the last round reached nothing iff the BFS exhausted before maxT
+      val depth = if (res.converged) res.supersteps - 1 else res.supersteps
+      val levels = (0 to depth).map(t => res.state.filter(col("dist") === t)
+        .select("seed", "id", "dist", "sigma"))
 
-    // ---- backward: dependency accumulation, deepest level first ---------
-    // δ starts at 0 on the deepest frontier; level t−1 vertices collect
-    // one floored integer term per shortest-path-DAG edge into level t.
-    var acc: DataFrame = null // (seed, id, delta) for levels processed
-    var deltaAtT = levels.last.select(col("seed"), col("id"),
-      col("sigma"), lit(0L).as("delta"))
-    for (lvl <- levels.size - 1 to 1 by -1) {
-      val prev = levels(lvl - 1)
-      val contrib = deltaAtT.as("w")
-        .join(und, col("w.id") === und("dst"))
-        .select(col("w.seed").as("seed"), und("src").as("id"),
-          col("w.sigma").as("ws"), col("w.delta").as("wd"))
-        .join(prev.select(col("seed"), col("id"),
-          col("sigma").as("vs")), Seq("seed", "id"))
-        .groupBy(col("seed"), col("id"))
-        .agg(sum(expr("(vs * (1000000 + wd)) DIV ws")).as("delta"))
-      val prevDelta = prev.select(col("seed"), col("id"), col("sigma"))
-        .join(contrib, Seq("seed", "id"), "left")
-        .select(col("seed"), col("id"), col("sigma"),
-          coalesce(col("delta"), lit(0L)).as("delta"))
-        .localCheckpoint(true)
-      acc = if (acc == null) deltaAtT.select("seed", "id", "delta")
-        else acc.unionByName(deltaAtT.select("seed", "id", "delta"))
-      deltaAtT = prevDelta
-    }
-    // deltaAtT now holds the level-0 (seed) rows — Brandes discards δ(s,s)
-    und.unpersist(false)
-    if (acc == null) // maxT reached nothing: no betweenness mass
-      return seeds.select(col("id"), lit(0L).as("bc_q6")).limit(0)
-    acc.filter(col("seed") =!= col("id"))
-      .groupBy(col("id")).agg(sum(col("delta")).as("bc_q6"))
-      .filter(col("bc_q6") > 0)
+      // ---- backward: dependency accumulation, deepest level first ---------
+      // δ starts at 0 on the deepest frontier; level t−1 vertices collect
+      // one floored integer term per shortest-path-DAG edge into level t.
+      var acc: DataFrame = null // (seed, id, delta) for levels processed
+      var deltaAtT = levels.last.select(col("seed"), col("id"),
+        col("sigma"), lit(0L).as("delta"))
+      for (lvl <- levels.size - 1 to 1 by -1) {
+        val prev = levels(lvl - 1)
+        val contrib = deltaAtT.as("w")
+          .join(und, col("w.id") === und("dst"))
+          .select(col("w.seed").as("seed"), und("src").as("id"),
+            col("w.sigma").as("ws"), col("w.delta").as("wd"))
+          .join(prev.select(col("seed"), col("id"),
+            col("sigma").as("vs")), Seq("seed", "id"))
+          .groupBy(col("seed"), col("id"))
+          .agg(sum(expr("(vs * (1000000 + wd)) DIV ws")).as("delta"))
+        val prevDelta = prev.select(col("seed"), col("id"), col("sigma"))
+          .join(contrib, Seq("seed", "id"), "left")
+          .select(col("seed"), col("id"), col("sigma"),
+            coalesce(col("delta"), lit(0L)).as("delta"))
+          .localCheckpoint(true)
+        acc = if (acc == null) deltaAtT.select("seed", "id", "delta")
+          else acc.unionByName(deltaAtT.select("seed", "id", "delta"))
+        deltaAtT = prevDelta
+      }
+      // deltaAtT now holds the level-0 (seed) rows — Brandes discards δ(s,s)
+      if (acc == null) // maxT reached nothing: no betweenness mass
+        seeds.select(col("id"), lit(0L).as("bc_q6")).limit(0)
+      else acc.filter(col("seed") =!= col("id"))
+        .groupBy(col("id")).agg(sum(col("delta")).as("bc_q6"))
+        .filter(col("bc_q6") > 0)
+    } finally und.unpersist(false)
   }
 }

@@ -3,6 +3,7 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.{LocalStore, Superstep}
 
 /** Jones–Plassmann greedy graph coloring (Jones & Plassmann 1993): each
   * round, every uncolored vertex whose FIXED random priority beats all of
@@ -21,9 +22,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape per round: one edges⋈uncolored join for the neighborhood
   * priority max, one edges⋈colored join for the used-color sets (both
-  * map-side combinable aggregates), frontier-sized anti-joins — the
-  * PageRank-superstep family. State is stats-rebased per round
-  * (Dataflow.checkpointRebased).
+  * map-side combinable aggregates), one left join folding the winners'
+  * colors into the state — the PageRank-superstep family on
+  * [[graft.engine.Superstep.run]].
   *
   * [[jonesPlassmannLdf]] is the largest-degree-first variant (Hasenplaugh
   * et al., SPAA'14 "Ordering heuristics for parallel graph coloring"): the
@@ -42,15 +43,18 @@ object Coloring {
 
   def jonesPlassmann(edges: DataFrame, maxRounds: Int = 64,
       seed: Long = 42L): DataFrame =
-    run(edges, maxRounds, seed, largestFirst = false)._1
+    run(edges, maxRounds, seed, largestFirst = false).state
 
   def jonesPlassmannLdf(edges: DataFrame, maxRounds: Int = 64,
       seed: Long = 42L): DataFrame =
-    run(edges, maxRounds, seed, largestFirst = true)._1
+    run(edges, maxRounds, seed, largestFirst = true).state
 
-  /** Variant returning the round count too (probes, specs). */
+  /** The coloring on [[Superstep.run]]; the result's state is (id, color)
+    * and its metrics count the still-uncolored vertices per round. Fails
+    * loudly when `maxRounds` rounds leave a vertex uncolored.
+    */
   def run(edges: DataFrame, maxRounds: Int, seed: Long,
-      largestFirst: Boolean): (DataFrame, Int) = {
+      largestFirst: Boolean): Superstep.RunResult = {
     val und = edges
       .select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -59,7 +63,7 @@ object Coloring {
     val hashPri = GraphOps.lehmerHash(col("id"), lit(0L), seed) *
       4294967296L + (col("id") % 4294967296L)
     val dec = "decimal(38,0)"
-    val init =
+    val pri =
       if (largestFirst) und.groupBy(col("src").as("id"))
         .agg(count(lit(1)).as("deg"))
         .select(col("id"),
@@ -68,12 +72,13 @@ object Coloring {
             hashPri.cast(dec)).as("pri"))
       else und.select(col("src").as("id")).distinct()
         .select(col("id"), hashPri.as("pri"))
-    var uncol = graft.core.Dataflow.checkpointRebased(init)
-    var colored: DataFrame = null // (id, color)
-    var round = 0
-    while (!uncol.isEmpty) {
-      require(round < maxRounds,
-        s"jonesPlassmann: not done after $maxRounds rounds")
+    // state (id, pri, color, delta): color is null and delta = 1.0 while
+    // the vertex is still uncolored
+    val init = pri.select(col("id"), col("pri"),
+      lit(null).cast("long").as("color"), lit(1.0).as("delta"))
+
+    def step(state: DataFrame, iter: Int): DataFrame = {
+      val uncol = state.filter(col("delta") > 0)
       val nbrMax = und
         .join(uncol.select(col("id").as("dst"), col("pri").as("np")),
           Seq("dst"))
@@ -81,15 +86,12 @@ object Coloring {
       val winners = uncol.join(nbrMax, Seq("id"), "left")
         .filter(col("maxnp").isNull || col("pri") > col("maxnp"))
         .select(col("id"))
-      val used =
-        if (colored == null) winners.select(col("id"),
-          lit(null).cast("array<bigint>").as("used")).limit(0)
-        else und
-          .join(colored.select(col("id").as("dstc"), col("color")),
-            und("dst") === col("dstc"))
-          .join(winners.select(col("id").as("src")), Seq("src"))
-          .groupBy(col("src").as("id"))
-          .agg(collect_set(col("color")).as("used"))
+      val used = und
+        .join(state.filter(col("color").isNotNull)
+          .select(col("id").as("dst"), col("color")), Seq("dst"))
+        .join(winners.select(col("id").as("src")), Seq("src"))
+        .groupBy(col("src").as("id"))
+        .agg(collect_set(col("color")).as("used"))
       // mex: the smallest value in 0..|used| missing from used — exact,
       // tiny per-vertex arrays (bounded by degree), identical in DuckDB
       val emptyU = expr("CAST(array() AS ARRAY<BIGINT>)")
@@ -99,18 +101,19 @@ object Coloring {
             sequence(lit(0L),
               size(coalesce(col("used"), emptyU)).cast("long")),
             x => !array_contains(coalesce(col("used"), emptyU), x))),
-          lit(0L)).as("color"))
-      colored = graft.core.Dataflow.checkpointRebased(
-        if (colored == null) newly else colored.unionByName(newly))
-      uncol = graft.core.Dataflow.checkpointRebased(
-        uncol.join(newly.select("id"), Seq("id"), "left_anti"))
-      round += 1
+          lit(0L)).as("ncolor"))
+      state.join(newly, Seq("id"), "left")
+        .select(col("id"), col("pri"),
+          coalesce(col("color"), col("ncolor")).as("color"))
+        .withColumn("delta", when(col("color").isNull, 1.0).otherwise(0.0))
     }
-    und.unpersist(false)
-    val out =
-      if (colored == null)
-        uncol.select(col("id"), lit(0L).as("color")).limit(0)
-      else colored
-    (out, round)
+
+    val res =
+      try Superstep.run(init, step, tol = 0.0, maxIters = maxRounds,
+        new LocalStore)
+      finally und.unpersist(false)
+    require(res.converged,
+      s"jonesPlassmann: not done after $maxRounds rounds")
+    res.copy(state = res.state.select("id", "color"))
   }
 }

@@ -3,6 +3,7 @@ package graft.algos
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.LinkGraph
+import graft.engine.{LocalStore, Superstep}
 
 /** Smaller reference apps: bond percolation, k-hop subgraph extraction,
   * degree distribution, weighted/seeded label propagation
@@ -91,18 +92,25 @@ object GraphOps {
        |WHERE iter = (SELECT MAX(iter) FROM cc) ORDER BY id""".stripMargin
 
   /** k-hop undirected subgraph extraction from a seed set (subgraph.cpp):
-    * BFS frontier for `hops` supersteps; returns the induced edge set.
+    * BFS frontier for at most `hops` supersteps (stopping early once no new
+    * vertex is reached); returns the induced edge set.
     */
   def kHopSubgraph(spark: SparkSession, edges: DataFrame, seeds: DataFrame,
       hops: Int): DataFrame = {
     val und = LinkGraph.undirected(edges).select("src", "dst").distinct()
       .localCheckpoint(true)
-    var reached = seeds.select(col("id")).distinct().localCheckpoint(true)
-    for (_ <- 1 to hops) {
-      val next = und.join(reached.withColumnRenamed("id", "src"),
-        Seq("src"), "left_semi").select(col("dst").as("id"))
-      reached = reached.unionAll(next).distinct().localCheckpoint(true)
+    // state (id, delta): delta = 1.0 for vertices first reached last round
+    val init = seeds.select(col("id")).distinct().withColumn("delta", lit(1.0))
+    def step(state: DataFrame, iter: Int): DataFrame = {
+      val frontier = state.filter(col("delta") > 0).select(col("id").as("src"))
+      val hit = und.join(frontier, Seq("src"), "left_semi")
+        .select(col("dst").as("id")).distinct()
+      state.join(hit, Seq("id"), "full_outer")
+        .select(col("id"),
+          when(col("delta").isNull, 1.0).otherwise(0.0).as("delta"))
     }
+    val reached = Superstep.run(init, step, tol = 0.0, maxIters = hops,
+      new LocalStore).state.select("id")
     edges
       .join(reached.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
       .join(reached.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
@@ -131,27 +139,26 @@ object GraphOps {
     val e = edges.select(col("src"), col("dst"), col("weight"))
       .repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    var dist = Seq((source, 0.0)).toDF("id", "dist").localCheckpoint(true)
-    var frontier = dist
-    var round = 0
-    while (frontier.limit(1).count() > 0) {
-      if (round >= maxRounds) throw new IllegalStateException(
+    try {
+      // state (id, dist, delta): delta = 1.0 when dist improved last round
+      val init = Seq((source, 0.0, 1.0)).toDF("id", "dist", "delta")
+      def step(state: DataFrame, iter: Int): DataFrame = {
+        val frontier = state.filter(col("delta") > 0)
+        val cand = frontier.join(e, frontier("id") === e("src"))
+          .select(col("dst").as("id"), (col("dist") + col("weight")).as("nd"))
+          .groupBy("id").agg(min("nd").as("nd"))
+        // least() skips nulls: vertices without a candidate keep their dist
+        state.join(cand, Seq("id"), "full_outer")
+          .select(col("id"), least(col("dist"), col("nd")).as("dist"),
+            when(col("dist").isNull || col("nd") < col("dist"), 1.0)
+              .otherwise(0.0).as("delta"))
+      }
+      val res = Superstep.run(init, step, tol = 0.0, maxIters = maxRounds,
+        new LocalStore)
+      if (!res.converged) throw new IllegalStateException(
         s"sssp did not converge in $maxRounds rounds")
-      val cand = frontier.join(e, frontier("id") === e("src"))
-        .select(col("dst").as("id"), (col("dist") + col("weight")).as("nd"))
-        .groupBy("id").agg(min("nd").as("nd"))
-      val improved = cand.join(dist, Seq("id"), "left")
-        .filter(col("dist").isNull || col("nd") < col("dist"))
-        .select(col("id"), col("nd").as("dist"))
-        .localCheckpoint(true)
-      dist = graft.core.Dataflow.checkpointRebased(
-        dist.unionAll(improved).groupBy("id").agg(min("dist").as("dist")))
-      frontier = improved
-      round += 1
-    }
-    e.unpersist(false)
-    dist
+      res.state.select("id", "dist")
+    } finally e.unpersist(false)
   }
 
   /** Unrolled DuckDB oracle for [[sssp]]: `rounds` synchronous relaxation

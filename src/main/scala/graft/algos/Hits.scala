@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.LinkGraph
+import graft.engine.{LocalStore, Superstep}
 
 /** HITS (Kleinberg hubs & authorities) — link-analysis beyond the
   * reference's app set (it ships PageRank only), the other classic
@@ -40,11 +41,11 @@ object Hits {
       .sortWithinPartitions("src").persist(StorageLevel.MEMORY_AND_DISK)
     val eDst = edges.select("src", "dst").repartition(parts, col("dst"))
       .sortWithinPartitions("dst").persist(StorageLevel.MEMORY_AND_DISK)
-    eSrc.count(); eDst.count()
 
-    var state = LinkGraph.verticesPartitioned(spark, edges, parts)
-      .select(col("id"), lit(1.0).as("hub"), lit(1.0).as("auth"))
-      .localCheckpoint(true)
+    // state (id, hub, auth, delta); tol = -1 runs exactly `iters` rounds
+    val init = LinkGraph.verticesPartitioned(spark, edges, parts)
+      .select(col("id"), lit(1.0).as("hub"), lit(1.0).as("auth"),
+        lit(0.0).as("delta"))
 
     def l2normalize(df: DataFrame, c: String): DataFrame = {
       val norm = df.agg(sqrt(sum(col(c) * col(c))).as("__n"))
@@ -52,26 +53,31 @@ object Hits {
         .withColumn(c, col(c) / col("__n")).drop("__n")
     }
 
-    for (_ <- 1 to iters) {
+    def step(state: DataFrame, iter: Int): DataFrame = {
       val auth = state.select(col("id"), col("hub"))
         .join(eSrc, state("id") === eSrc("src"))
         .groupBy(col("dst").as("id")).agg(sum("hub").as("auth"))
       val withAuth = l2normalize(
-        state.select("id", "hub")
+        state.select(col("id"), col("hub").as("prev"))
           .join(auth, Seq("id"), "left")
           .withColumn("auth", coalesce(col("auth"), lit(0.0))), "auth")
       val hub = withAuth.select(col("id"), col("auth"))
         .join(eDst, withAuth("id") === eDst("dst"))
         .groupBy(col("src").as("id")).agg(sum("auth").as("hub"))
-      state = l2normalize(
-        withAuth.select("id", "auth")
+      l2normalize(
+        withAuth.select("id", "auth", "prev")
           .join(hub, Seq("id"), "left")
           .withColumn("hub", coalesce(col("hub"), lit(0.0))), "hub")
-        .select("id", "hub", "auth")
-        .localCheckpoint(true) // truncate: constant-size plan per iteration
+        .select(col("id"), col("hub"), col("auth"),
+          abs(col("hub") - col("prev")).as("delta"))
     }
-    eSrc.unpersist(false); eDst.unpersist(false)
-    state
+
+    val res =
+      try {
+        eSrc.count(); eDst.count()
+        Superstep.run(init, step, tol = -1.0, maxIters = iters, new LocalStore)
+      } finally { eSrc.unpersist(false); eDst.unpersist(false) }
+    res.state.select("id", "hub", "auth")
   }
 
   /** Unrolled ANSI-SQL oracle for [[run]] (DuckDB-runnable): the same

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.LinkGraph
+import graft.engine.{LocalStore, Superstep}
 
 /** k-core decomposition, matching the reference's kcores app
   * (/root/reference/toolkits/graph_analytics/kcores.cpp:81-142: iterative
@@ -26,19 +27,23 @@ import graft.core.LinkGraph
   */
 object KCores {
 
-  /** Per-round changed-vertex counts of this THREAD's most recent
-    * [[coreness]] run — diagnostic evidence that the frontier collapses
-    * (VERDICT r2 item 9). Thread-local: concurrent runs (parallel test
-    * suites sharing the JVM) must not read each other's diagnostics.
-    */
-  private[graft] val lastRoundChanged: ThreadLocal[List[Long]] =
-    ThreadLocal.withInitial(() => Nil)
-
   /** (id, coreness) for every vertex WITH DEGREE >= 1 of the undirected
     * graph (state is seeded from edge endpoints; isolated vertices — which
     * can only appear if the caller's edge table mentions them nowhere — have
     * coreness 0 by definition and are not listed; left-join
-    * [[graft.core.LinkGraph.vertices]] to add them back if needed).
+    * [[graft.core.LinkGraph.vertices]] to add them back if needed). Fails
+    * loudly when `maxIters` rounds do not reach the fixpoint.
+    */
+  def coreness(spark: SparkSession, edges: DataFrame,
+      maxIters: Int = 200): DataFrame = {
+    val res = run(spark, edges, maxIters)
+    require(res.converged,
+      s"k-cores did not reach its fixpoint within maxIters=$maxIters rounds")
+    res.state.select(col("id"), col("core").as("coreness"))
+  }
+
+  /** The h-index fixpoint on [[Superstep.run]]: state (id, core, delta),
+    * delta = 1.0 when the vertex's core dropped last round.
     *
     * Frontier: a vertex's h-index can only change when a NEIGHBOR's value
     * changed last round, so each round recomputes h only over edges whose
@@ -46,8 +51,8 @@ object KCores {
     * recompute set collapses geometrically once the low-core periphery
     * settles, leaving rounds that touch just the contested core boundary.
     */
-  def coreness(spark: SparkSession, edges: DataFrame,
-      maxIters: Int = 200): DataFrame = {
+  private[graft] def run(spark: SparkSession, edges: DataFrame,
+      maxIters: Int): Superstep.RunResult = {
     val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val und = LinkGraph.undirected(edges.select("src", "dst", "weight"))
       .select("src", "dst").distinct()
@@ -61,46 +66,44 @@ object KCores {
       .repartition(parts, col("dst"))
       .sortWithinPartitions("dst")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    und.count(); undDst.count()
+    try {
+      und.count(); undDst.count()
+      // core_0 = degree; round 0: everyone just changed
+      val init = und.groupBy(col("src").as("id"))
+        .agg(count(lit(1)).as("core"))
+        .withColumn("delta", lit(1.0))
 
-    var state = und.groupBy(col("src").as("id"))
-      .agg(count(lit(1)).as("core")) // core_0 = degree
-      .localCheckpoint(true)
-    var changedSet = state.select("id") // round 0: everyone just changed
-    var iter = 0
-    var changed = 1L
-    val rounds = List.newBuilder[Long]
-    while (changed > 0 && iter < maxIters) {
-      // recompute h only where it can move: vertices with a changed neighbor
-      val touched = undDst
-        .join(changedSet.select(col("id").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src")).distinct()
-      val activeEdges = und.join(touched, Seq("src"), "left_semi")
-      val nbrVals = activeEdges
-        .join(state.select(col("id").as("nid"), col("core").as("nval")),
-          col("dst") === col("nid"))
-        .select(col("src").as("id"), col("nval"))
-      val w = Window.partitionBy("id").orderBy(desc("nval"))
-      val h = nbrVals
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .groupBy("id").agg(max(least(col("rn"), col("nval"))).as("h"))
-      // left join: untouched vertices keep their core (h is monotone
-      // non-increasing, so least() with the old value is the fixpoint rule)
-      val next = state.join(h, Seq("id"), "left")
-        .select(col("id"),
-          least(col("core"), coalesce(col("h"), col("core"))).as("core"),
-          (col("core") > coalesce(col("h"), col("core"))).cast("long")
-            .as("chg"))
-        .localCheckpoint(true)
-      changed = next.agg(coalesce(sum("chg"), lit(0L))).head().getLong(0)
-      rounds += changed
-      changedSet = next.filter(col("chg") === 1).select("id")
-      state = next.select("id", "core")
-      iter += 1
-    }
-    lastRoundChanged.set(rounds.result())
-    und.unpersist(false); undDst.unpersist(false)
-    state.select(col("id"), col("core").as("coreness"))
+      def step(state: DataFrame, iter: Int): DataFrame = {
+        // recompute h only where it can move: vertices with a changed
+        // neighbor
+        val changed = state.filter(col("delta") > 0).select(col("id").as("dst"))
+        val touched = undDst.join(changed, Seq("dst"), "left_semi")
+          .select(col("src")).distinct()
+        // merge hints keep the scale plan at every size: a broadcast of a
+        // small edge view would cost its own Spark job each round, while
+        // these merge joins reuse the views' src partitioning and the
+        // state's id partitioning, shuffling only frontier-sized rows
+        val nbrVals = und.join(touched.hint("merge"), Seq("src"), "left_semi")
+          .join(state.select(col("id").as("nid"), col("core").as("nval"))
+            .hint("merge"), col("dst") === col("nid"))
+          .select(col("src").as("id"), col("nval"))
+        val w = Window.partitionBy("id").orderBy(desc("nval"))
+        val h = nbrVals
+          .withColumn("rn", row_number().over(w).cast("long"))
+          .groupBy("id").agg(max(least(col("rn"), col("nval"))).as("h"))
+        // left join: untouched vertices keep their core (h is monotone
+        // non-increasing, so least() with the old value is the fixpoint
+        // rule)
+        state.join(h, Seq("id"), "left")
+          .select(col("id"),
+            least(col("core"), coalesce(col("h"), col("core"))).as("core"),
+            when(col("core") > coalesce(col("h"), col("core")), 1.0)
+              .otherwise(0.0).as("delta"))
+      }
+
+      Superstep.run(init, step, tol = 0.0, maxIters = maxIters,
+        new LocalStore)
+    } finally { und.unpersist(false); undDst.unpersist(false) }
   }
 
   /** Self-terminating DuckDB oracle: the same h-index fixpoint as a

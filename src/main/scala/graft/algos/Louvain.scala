@@ -3,6 +3,7 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.{LocalStore, Superstep}
 
 /** Community detection by synchronous local-moving modularity optimization —
   * the distributed form of Louvain's phase 1 (Blondel et al. 2008,
@@ -27,8 +28,8 @@ import org.apache.spark.storage.StorageLevel
   * community labels on dst, the PageRank-superstep shape) + a map-side
   * combinable groupBy(v, community); community totals are a
   * community-count-sized aggregate and the 2m scalar rides as a broadcast
-  * 1-row frame. Convergence is delta-iterated with a per-round moved-count
-  * read (the same bounded driver gate every iterative algo here uses).
+  * 1-row frame. Rounds run on [[Superstep.run]] with delta = "moved", so
+  * the convergence read is the driver's one aggregate per round.
   */
 object Louvain {
 
@@ -42,14 +43,8 @@ object Louvain {
     * relabeled to its minimum member id (label-choice independent, like
     * the CC convention). Fails loudly on a round budget overrun rather
     * than returning a half-converged partition.
-    *
-    * `minMoved` > 0 relaxes the fixpoint to "stop once a round moves ≤
-    * minMoved vertices" — the standard sequential-Louvain practice of
-    * cutting the geometric improvement tail (set it to ~0.1% of |V| at
-    * scale); the default 0 is the exact fixpoint the planted oracle pins.
     */
-  def localMoving(edges: DataFrame, maxRounds: Int = 40,
-      minMoved: Long = 0L): DataFrame = {
+  def localMoving(edges: DataFrame, maxRounds: Int = 40): DataFrame = {
     val und = edges
       .select(col("src"), col("dst"), col("w"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"),
@@ -63,21 +58,17 @@ object Louvain {
       .agg(sum(col("w")).as("k"))
     val m2 = deg.agg(sum(col("k")).as("m2")) // = 2m, broadcast 1-row
 
-    // comm is inner-joined several times per round (nbrW, scored, totals),
-    // so its checkpoint must be stats-REBASED — plain localCheckpoint
-    // compounds the size estimate's digit count ~5x per round until the
-    // driver pins a core in BigInteger stats products (Dataflow scaladoc;
-    // measured: the 22 M-edge probe stalled at round 14)
-    var comm = graft.core.Dataflow.checkpointRebased(
-      deg.select(col("id"), col("id").as("c"), col("k")))
-    var round = 0
-    var moved = Long.MaxValue
-    // moved == 0 is the fixpoint: a winner exists whenever any vertex
-    // strictly gains (the globally max-priority gainer always wins its
-    // neighborhood), so a zero-move round means no strict gainer remains
-    while (moved > minMoved) {
-      require(round < maxRounds,
-        s"louvain: no fixpoint after $maxRounds rounds")
+    // state (id, c, k, delta): delta = 1.0 when the vertex moved last
+    // round. comm is inner-joined several times per round (nbrW, scored,
+    // totals), so its checkpoint must be stats-REBASED — LocalStore's is
+    // (Dataflow scaladoc; measured: the 22 M-edge probe stalled at round 14
+    // when plain localCheckpoint compounded the size estimate)
+    val init = deg.select(col("id"), col("id").as("c"), col("k"),
+      lit(1.0).as("delta"))
+    // a zero-move round is the fixpoint: a winner exists whenever any
+    // vertex strictly gains (the globally max-priority gainer always wins
+    // its neighborhood), so no move means no strict gainer remains
+    def step(comm: DataFrame, iter: Int): DataFrame = {
       val totals = comm.groupBy(col("c")).agg(sum(col("k")).as("s"))
       // weight from every vertex to each adjacent community (+ its own
       // community as a 0-weight candidate so "stay" is always scored)
@@ -108,12 +99,12 @@ object Louvain {
       // every ADJACENT gainer's — no two neighbors move together, so the
       // synchronous herding that splits a clique into two flip-flopping
       // halves cannot form. Priority = (Lehmer hash << 32 | id): unique,
-      // engine-portable, re-salted each round so every gainer eventually
-      // wins its neighborhood.
+      // engine-portable, re-salted each round (salt = 0-based round) so
+      // every gainer eventually wins its neighborhood.
       val want = best.join(stay, Seq("id"))
         .filter(col("bscore") > col("stay_score"))
         .select(col("id"), col("nc"),
-          (GraphOps.lehmerHash(col("id"), lit(round), 77L) * 4294967296L +
+          (GraphOps.lehmerHash(col("id"), lit(iter - 1), 77L) * 4294967296L +
             (col("id") % 4294967296L)).as("pri"))
       val nbrPri = undNS
         .join(want.select(col("id").as("dst"), col("pri").as("np")),
@@ -122,24 +113,16 @@ object Louvain {
       val winners = want.join(nbrPri, Seq("id"), "left")
         .filter(col("maxnp").isNull || col("pri") > col("maxnp"))
         .select(col("id"), col("nc"))
-      val next = graft.core.Dataflow.checkpointRebased(
-        comm.join(winners, Seq("id"), "left")
-          .select(col("id"), coalesce(col("nc"), col("c")).as("c"), col("k"),
-            col("nc").isNotNull.as("moved")))
-      moved = next.filter(col("moved")).count()
-      comm = next.select(col("id"), col("c"), col("k"))
-      round += 1
-      if (sys.env.contains("GRAFT_LOUVAIN_TRACE")) {
-        // sample moves only when tiny — never a corpus-sized collect
-        val mv = if (moved > 0 && moved <= 64)
-          next.filter(col("moved")).select("id", "c").collect()
-            .map(r => s"${r.getLong(0)}->${r.getLong(1)}").sorted.take(12)
-        else Array.empty[String]
-        System.err.println(
-          s"[louvain] round=$round moved=$moved ${mv.mkString(" ")}")
-      }
+      comm.join(winners, Seq("id"), "left")
+        .select(col("id"), coalesce(col("nc"), col("c")).as("c"), col("k"),
+          when(col("nc").isNotNull, 1.0).otherwise(0.0).as("delta"))
     }
-    und.unpersist(false)
+    val res =
+      try Superstep.run(init, step, tol = 0.0, maxIters = maxRounds,
+        new LocalStore)
+      finally und.unpersist(false)
+    require(res.converged, s"louvain: no fixpoint after $maxRounds rounds")
+    val comm = res.state
     val minLabel = comm.groupBy(col("c")).agg(min(col("id")).as("community"))
     comm.join(minLabel, Seq("c")).select(col("id"), col("community"))
   }
@@ -207,8 +190,8 @@ object Louvain {
     * the contracted graphs shrink geometrically, so the level loop is a
     * bounded driver gate exactly like every other delta iteration here.
     */
-  def louvain(edges: DataFrame, maxLevels: Int = 12, maxRounds: Int = 40,
-      minMoved: Long = 0L): DataFrame = {
+  def louvain(edges: DataFrame, maxLevels: Int = 12,
+      maxRounds: Int = 40): DataFrame = {
     var g = edges.select(col("src"), col("dst"), col("w"))
     var mapping: DataFrame = null // original id -> current super-vertex
     var level = 0
@@ -219,7 +202,7 @@ object Louvain {
       // labels and g are each referenced more than once downstream —
       // stats-rebased checkpoints (see Dataflow.checkpointRebased)
       val labels = graft.core.Dataflow.checkpointRebased(
-        localMoving(g, maxRounds, minMoved))
+        localMoving(g, maxRounds))
       val merged = labels.filter(col("id") =!= col("community")).count()
       mapping =
         if (mapping == null) labels

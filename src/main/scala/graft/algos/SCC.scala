@@ -1,8 +1,9 @@
 package graft.algos
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{Dataflow, LinkGraph}
+import graft.core.LinkGraph
+import graft.engine.{LocalStore, Superstep}
 
 /** Strongly-connected components via iterative forward-coloring + backward
   * confirmation — the same Salihoglu-Widom "coloring" scheme the reference
@@ -19,8 +20,7 @@ import graft.core.{Dataflow, LinkGraph}
   *     1. forward fixpoint: color(v) = max id that reaches v (incl. self) —
   *        delta-iterated: only vertices whose color changed last round emit
   *        (the reference's own scheduler is selective,
-  *        stronglyconnectedcomponents.cpp:146-407), with convergence checked
-  *        every [[CheckEvery]] rounds
+  *        stronglyconnectedcomponents.cpp:146-407)
   *     2. roots: color(v) == v
   *     3. backward fixpoint within each color class from its root — the
   *        confirmed set is one SCC (labeled by its root id)
@@ -47,19 +47,13 @@ import graft.core.{Dataflow, LinkGraph}
   * @param maxRounds peel-round budget (fail-loud)
   * @param driverFinishBelow collect-and-Tarjan threshold on remaining
   *   vertices+edges; 0 disables
-  * @param maxInnerRounds budget for each forward/backward/trim fixpoint —
-  *   a high-diameter graph spins O(V) inner rounds accumulating checkpoints
+  * @param maxInnerRounds budget for each forward/backward/trim fixpoint
+  *   (each runs on [[Superstep.run]] with it as `maxIters`) — a
+  *   high-diameter graph spins O(V) inner rounds accumulating checkpoints
   *   with no loud failure otherwise (ADVICE r3); exceeded → exception
   *   naming the knob
   */
 object SCC {
-
-  /** Convergence-check cadence of the forward phase: between checks the loop
-    * trusts the frontier, so quiescence costs at most CheckEvery-1 extra
-    * empty-frontier rounds (no E-row join work) while every round in the
-    * long pre-convergence stretch saves one blocking driver action.
-    */
-  private val CheckEvery = 2
 
   def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 50,
       driverFinishBelow: Long = 2000000L,
@@ -76,10 +70,15 @@ object SCC {
       result = if (result == null) df else result.unionAll(df)
       result = result.localCheckpoint(true)
     }
-    def innerBudgetCheck(r: Int, phase: String): Unit =
-      if (r >= maxInnerRounds) throw new IllegalStateException(
+    def fixpoint(phase: String, init: DataFrame,
+        step: (DataFrame, Int) => DataFrame): DataFrame = {
+      val res = Superstep.run(init, step, tol = 0.0,
+        maxIters = maxInnerRounds, new LocalStore)
+      if (!res.converged) throw new IllegalStateException(
         s"SCC $phase fixpoint exceeded maxInnerRounds=$maxInnerRounds " +
           s"(high-diameter graph? raise maxInnerRounds or driverFinishBelow)")
+      res.state
+    }
 
     while (remaining > 0 && round < maxRounds) {
       // --- driver finish ------------------------------------------------
@@ -98,75 +97,68 @@ object SCC {
       // changed-only pattern as CC/k-cores. A provenance DAG still drains
       // completely here in diameter rounds; each round's join work is
       // frontier-sized against the static partitioned edge views.
-      // A long pure path would spin (one vertex per round) —
-      // innerBudgetCheck fails loudly, and the driver finish above absorbs
-      // any path that fits the threshold first.
+      // A long pure path would spin (one vertex per round) — the round
+      // budget fails loudly, and the driver finish above absorbs any path
+      // that fits the threshold first.
       val tSrc = liveEdges.repartition(parts, col("src"))
         .sortWithinPartitions("src")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       val tDst = liveEdges.repartition(parts, col("dst"))
         .sortWithinPartitions("dst")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val inDeg = tDst.groupBy(col("dst").as("id"))
-        .agg(count(lit(1)).as("in"))
-      val outDeg = tSrc.groupBy(col("src").as("id"))
-        .agg(count(lit(1)).as("out"))
-      // deg state: hash-partitioned on id, updated with frontier messages.
-      // Per-round state is checkpointRebased, not plain localCheckpoint:
-      // dIn/dOut are aggregates over frontier×edges INNER joins (size
-      // estimate = product of children) and nextDeg left-joins deg with
-      // both, so an inherited estimate compounds ~3× in bit-length per trim
-      // round — a deep acyclic fringe (the long-path shapes trim exists
-      // for) would hit the BigInteger-stats meltdown Dataflow documents.
-      var deg = Dataflow.checkpointRebased(
-        live.join(inDeg, Seq("id"), "left")
+      try {
+        val inDeg = tDst.groupBy(col("dst").as("id"))
+          .agg(count(lit(1)).as("in"))
+        val outDeg = tSrc.groupBy(col("src").as("id"))
+          .agg(count(lit(1)).as("out"))
+        // state (id, in, out, dead, delta), hash-partitioned on id and
+        // updated with frontier messages; delta = 1.0 marks the live
+        // vertices with no live in- or out-edge — this round's peel
+        // frontier. Peeled rows stay in the state as dead.
+        def peelable(in: Column, out: Column, dead: Column): Column =
+          when(!dead && (in === 0 || out === 0), 1.0).otherwise(0.0)
+        val init = live.join(inDeg, Seq("id"), "left")
           .join(outDeg, Seq("id"), "left")
           .select(col("id"), coalesce(col("in"), lit(0L)).as("in"),
-            coalesce(col("out"), lit(0L)).as("out"))
-          .repartition(parts, col("id")))
-      var frontier0 = Dataflow.checkpointRebased(
-        deg.filter(col("in") === 0 || col("out") === 0).select("id"))
-      var peeledTotal = 0L
-      var trimRound = 0
-      var frontierCnt = frontier0.count()
-      while (frontierCnt > 0) {
-        innerBudgetCheck(trimRound, "trim")
-        addResult(frontier0.select(col("id"), col("id").as("scc")))
-        peeledTotal += frontierCnt
-        // each peeled vertex kills its incident edges: decrement the other
-        // endpoint's opposing degree (edges with both endpoints peeled
-        // decrement a vertex that is already dead — harmless, it never
-        // re-enters the frontier because dead rows are dropped below)
-        val dIn = frontier0.join(tSrc, frontier0("id") === tSrc("src"))
-          .groupBy(col("dst").as("id")).agg(count(lit(1)).as("din"))
-        val dOut = frontier0.join(tDst, frontier0("id") === tDst("dst"))
-          .groupBy(col("src").as("id")).agg(count(lit(1)).as("dout"))
-        val nextDeg = deg
-          .join(frontier0.select(col("id").as("pid")), deg("id") === col("pid"),
-            "left_anti") // drop peeled rows: they are labeled already
-          .join(dIn, Seq("id"), "left")
-          .join(dOut, Seq("id"), "left")
-          .select(col("id"), (col("in") - coalesce(col("din"), lit(0L))).as("in"),
-            (col("out") - coalesce(col("dout"), lit(0L))).as("out"))
-        val nextDegCp = Dataflow.checkpointRebased(nextDeg)
-        frontier0 = Dataflow.checkpointRebased(
-          nextDegCp.filter(col("in") === 0 || col("out") === 0).select("id"))
-        deg = nextDegCp
-        frontierCnt = frontier0.count()
-        trimRound += 1
-      }
-      if (peeledTotal > 0) {
-        live = deg.select("id").localCheckpoint(true)
-        remaining -= peeledTotal
-        liveEdges = liveEdges
-          .join(live.select(col("id").as("ls")),
-            liveEdges("src") === col("ls"), "left_semi")
-          .join(live.select(col("id").as("ld")),
-            liveEdges("dst") === col("ld"), "left_semi")
+            coalesce(col("out"), lit(0L)).as("out"), lit(false).as("dead"))
+          .repartition(parts, col("id"))
+          .withColumn("delta", peelable(col("in"), col("out"), col("dead")))
+        def trimStep(deg: DataFrame, iter: Int): DataFrame = {
+          val frontier = deg.filter(col("delta") > 0).select("id")
+          // each peeled vertex kills its incident edges: decrement the other
+          // endpoint's opposing degree (edges with both endpoints peeled
+          // decrement a vertex that is already dead — harmless, dead rows
+          // never re-enter the frontier)
+          val dIn = frontier.join(tSrc, frontier("id") === tSrc("src"))
+            .groupBy(col("dst").as("id")).agg(count(lit(1)).as("din"))
+          val dOut = frontier.join(tDst, frontier("id") === tDst("dst"))
+            .groupBy(col("src").as("id")).agg(count(lit(1)).as("dout"))
+          deg.join(dIn, Seq("id"), "left")
+            .join(dOut, Seq("id"), "left")
+            .select(col("id"),
+              (col("in") - coalesce(col("din"), lit(0L))).as("in"),
+              (col("out") - coalesce(col("dout"), lit(0L))).as("out"),
+              (col("dead") || col("delta") > 0).as("dead"))
+            .withColumn("delta", peelable(col("in"), col("out"), col("dead")))
+        }
+        val trimmed = fixpoint("trim", init, trimStep)
+        val survivors = trimmed.filter(!col("dead")).select("id")
           .localCheckpoint(true)
-        liveEdgeCnt = liveEdges.count()
-      }
-      tSrc.unpersist(false); tDst.unpersist(false)
+        val left = survivors.count()
+        if (left < remaining) {
+          addResult(trimmed.filter(col("dead"))
+            .select(col("id"), col("id").as("scc")))
+          live = survivors
+          remaining = left
+          liveEdges = liveEdges
+            .join(live.select(col("id").as("ls")),
+              liveEdges("src") === col("ls"), "left_semi")
+            .join(live.select(col("id").as("ld")),
+              liveEdges("dst") === col("ld"), "left_semi")
+            .localCheckpoint(true)
+          liveEdgeCnt = liveEdges.count()
+        }
+      } finally { tSrc.unpersist(false); tDst.unpersist(false) }
       // trim can drop the remainder under the driver-finish threshold
       if (driverFinishBelow > 0 && remaining > 0 &&
           remaining + liveEdgeCnt <= driverFinishBelow) {
@@ -184,78 +176,58 @@ object SCC {
       val eDst = liveEdges.repartition(parts, col("dst"))
         .sortWithinPartitions("dst")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      eSrc.count(); eDst.count()
+      val inScc = try {
+        eSrc.count(); eDst.count()
 
-      // --- 1. forward max-color fixpoint -------------------------------
-      // Delta iteration (VERDICT r2 item 3): only vertices whose color
-      // changed last round emit messages — the same changed-only frontier
-      // CC uses — and the convergence check runs every CheckEvery rounds
-      // instead of every round, cutting driver round-trips. Extra rounds
-      // after quiescence are joins over an EMPTY frontier (near-free).
-      var colors = live.select(col("id"), col("id").as("color"))
-        .repartition(parts, col("id"))
-        .localCheckpoint(true)
-      var fwdFrontier = colors // round 0: every vertex "just changed"
-      var fwdRound = 0
-      var fwdDone = false
-      while (!fwdDone) {
-        innerBudgetCheck(fwdRound, "forward")
-        val msgs = fwdFrontier.join(eSrc, fwdFrontier("id") === eSrc("src"))
-          .groupBy(col("dst")).agg(max(col("color")).as("mcolor"))
-        val next = colors.join(msgs, colors("id") === msgs("dst"), "left")
-          .select(colors("id"),
-            greatest(col("color"), coalesce(col("mcolor"), col("color")))
-              .as("color"),
-            (coalesce(col("mcolor"), col("color")) > col("color"))
-              .as("chg"))
-          .localCheckpoint(true) // the one materializing action per round
-        fwdFrontier = next.filter(col("chg")).select("id", "color")
-        colors = next.select("id", "color")
-        fwdRound += 1
-        if (fwdRound % CheckEvery == 0)
-          fwdDone =
-            next.agg(sum(when(col("chg"), 1L).otherwise(0L)))
-              .head().getLong(0) == 0L
-      }
+        // --- 1. forward max-color fixpoint -------------------------------
+        // Delta iteration (VERDICT r2 item 3): only vertices whose color
+        // changed last round (delta = 1.0) emit messages — the same
+        // changed-only frontier CC uses.
+        val colorInit = live.select(col("id"), col("id").as("color"))
+          .repartition(parts, col("id"))
+          .withColumn("delta", lit(1.0)) // round 0: every vertex "just changed"
+        def forward(colors: DataFrame, iter: Int): DataFrame = {
+          val frontier = colors.filter(col("delta") > 0)
+          val msgs = frontier.join(eSrc, frontier("id") === eSrc("src"))
+            .groupBy(col("dst")).agg(max(col("color")).as("mcolor"))
+          colors.join(msgs, colors("id") === msgs("dst"), "left")
+            .select(colors("id"),
+              greatest(col("color"), coalesce(col("mcolor"), col("color")))
+                .as("color"),
+              when(coalesce(col("mcolor"), col("color")) > col("color"), 1.0)
+                .otherwise(0.0).as("delta"))
+        }
+        val colors = fixpoint("forward", colorInit, forward)
 
-      // --- 2+3. backward confirmation within color classes --------------
-      // Same delta-iterated state-update shape as the forward phase: the
-      // confirmation state (id, color, scc) stays hash-partitioned on id
-      // across rounds (zero state re-exchange), only the frontier's
-      // predecessor candidates shuffle, and the "already confirmed" check is
-      // the scc column itself — no V-row visited-set anti-join per round.
-      var bstate = colors.select(col("id"), col("color"),
-        when(col("color") === col("id"), col("id")).as("scc"))
-        .localCheckpoint(true)
-      var frontier = bstate.filter(col("scc").isNotNull)
-        .select(col("id"), col("scc"))
-      var bRound = 0
-      var bDone = false
-      while (!bDone) {
-        innerBudgetCheck(bRound, "backward")
-        // predecessor candidates of the newly-confirmed frontier
-        val cand = frontier.join(eDst, frontier("id") === eDst("dst"))
-          .select(col("src").as("cid"), col("scc").as("cscc"))
-          .distinct()
-        // a predecessor joins the SCC iff its forward color equals the scc
-        // root; at most one cand row can satisfy color === cscc per vertex
-        val nxt = bstate.join(cand,
-          bstate("id") === col("cid") && bstate("color") === col("cscc"),
-          "left")
-          .select(bstate("id"), bstate("color"),
-            coalesce(bstate("scc"), col("cscc")).as("scc"),
-            (bstate("scc").isNull && col("cscc").isNotNull).as("chg"))
+        // --- 2+3. backward confirmation within color classes --------------
+        // Same delta-iterated state-update shape as the forward phase: the
+        // confirmation state (id, color, scc, delta) stays hash-partitioned on
+        // id across rounds (zero state re-exchange), only the frontier's
+        // predecessor candidates shuffle, and the "already confirmed" check is
+        // the scc column itself — no V-row visited-set anti-join per round.
+        val confirmInit = colors.select(col("id"), col("color"),
+          when(col("color") === col("id"), col("id")).as("scc"))
+          .withColumn("delta", when(col("scc").isNotNull, 1.0).otherwise(0.0))
+        def backward(bstate: DataFrame, iter: Int): DataFrame = {
+          // predecessor candidates of the newly-confirmed frontier
+          val frontier = bstate.filter(col("delta") > 0)
+          val cand = frontier.join(eDst, frontier("id") === eDst("dst"))
+            .select(col("src").as("cid"), col("scc").as("cscc"))
+            .distinct()
+          // a predecessor joins the SCC iff its forward color equals the scc
+          // root; at most one cand row can satisfy color === cscc per vertex
+          bstate.join(cand,
+            bstate("id") === col("cid") && bstate("color") === col("cscc"),
+            "left")
+            .select(bstate("id"), bstate("color"),
+              coalesce(bstate("scc"), col("cscc")).as("scc"),
+              when(bstate("scc").isNull && col("cscc").isNotNull, 1.0)
+                .otherwise(0.0).as("delta"))
+        }
+        fixpoint("backward", confirmInit, backward)
+          .filter(col("scc").isNotNull).select("id", "scc")
           .localCheckpoint(true)
-        frontier = nxt.filter(col("chg")).select(col("id"), col("scc"))
-        bstate = nxt.select("id", "color", "scc")
-        bRound += 1
-        if (bRound % CheckEvery == 0)
-          bDone = nxt.agg(sum(when(col("chg"), 1L).otherwise(0L)))
-            .head().getLong(0) == 0L
-      }
-      val inScc = bstate.filter(col("scc").isNotNull).select("id", "scc")
-        .localCheckpoint(true)
-      eSrc.unpersist(false); eDst.unpersist(false)
+      } finally { eSrc.unpersist(false); eDst.unpersist(false) }
 
       addResult(inScc)
 

@@ -1,9 +1,10 @@
 package graft.algos
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.core.Dataflow
+import graft.engine.{LocalStore, Superstep}
 
 /** k-truss — the edge-centric cohesion analog of k-cores (beyond the
   * reference's app set, which peels vertices but not edges): the maximal
@@ -73,27 +74,27 @@ object Truss {
     * wedge closes against the current edge set with one hash join. Work is
     * proportional to the REMOVED edges' triangle neighborhoods + an O(E)
     * scan, where the recount plan pays the full Σ_E min-deg intersection
-    * every round. Small removal batches broadcast. BENCH.md records the
+    * every round. Small removal batches broadcast (the batch size is the
+    * previous superstep's active count, so round 1's batch — its size
+    * unknown without an extra job — never does). BENCH.md records the
     * measured A/B at 22 M edges.
     */
   def kTrussDecremental(spark: SparkSession, edges: DataFrame, k: Int,
-      maxRounds: Int = 200,
-      perRound: (Int, Long, Long) => Unit = (_, _, _) => ()): DataFrame = {
+      maxRounds: Int = 200): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3, got $k")
     val e0 = TriangleCount.canonicalEdges(edges).localCheckpoint(true)
     val (supp0, o0) = support(e0)
-    var cur = Dataflow.checkpointRebased(
-      e0.join(supp0, Seq("u", "v"), "left")
-        .select(col("u"), col("v"),
-          coalesce(col("supp"), lit(0L)).as("supp")))
-    o0.unpersist(false)
-    var round = 0
-    var nRemoved = cur.filter(col("supp") < k - 2).count()
-    while (nRemoved > 0) {
-      if (round >= maxRounds) throw new IllegalStateException(
-        s"k-truss did not converge in $maxRounds peel rounds")
-      perRound(round, cur.count(), nRemoved)
-      val removed = cur.filter(col("supp") < k - 2).select("u", "v")
+    // state (u, v, supp, delta): delta = 1.0 marks the edges below k−2 —
+    // this round's removal batch
+    def weak(supp: Column): Column = when(supp < k - 2, 1.0).otherwise(0.0)
+    val init = e0.join(supp0, Seq("u", "v"), "left")
+      .select(col("u"), col("v"), coalesce(col("supp"), lit(0L)).as("supp"))
+      .withColumn("delta", weak(col("supp")))
+    val store = new LocalStore
+    def step(cur: DataFrame, iter: Int): DataFrame = {
+      // the previous round's active count is this round's batch size
+      val nRemoved = store.metrics.lastOption.fold(Long.MaxValue)(_.active)
+      val removed = cur.filter(col("delta") > 0).select("u", "v")
       val und = cur.select(col("u").as("a"), col("v").as("b"))
         .unionAll(cur.select(col("v").as("a"), col("u").as("b")))
       val deg = und.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
@@ -125,15 +126,18 @@ object Truss {
         .unionAll(tri.select(col("x").as("u"), col("z").as("v")))
         .unionAll(tri.select(col("y").as("u"), col("z").as("v")))
         .groupBy("u", "v").agg(count(lit(1)).as("dec"))
-      cur = Dataflow.checkpointRebased(
-        cur.filter(col("supp") >= k - 2)
-          .join(dec, Seq("u", "v"), "left")
-          .select(col("u"), col("v"),
-            (col("supp") - coalesce(col("dec"), lit(0L))).as("supp")))
-      round += 1
-      nRemoved = cur.filter(col("supp") < k - 2).count()
+      cur.filter(col("delta") === 0)
+        .join(dec, Seq("u", "v"), "left")
+        .select(col("u"), col("v"),
+          (col("supp") - coalesce(col("dec"), lit(0L))).as("supp"))
+        .withColumn("delta", weak(col("supp")))
     }
-    cur.select("u", "v")
+    val res =
+      try Superstep.run(init, step, tol = 0.0, maxIters = maxRounds, store)
+      finally o0.unpersist(false)
+    if (!res.converged) throw new IllegalStateException(
+      s"k-truss did not converge in $maxRounds peel rounds")
+    res.state.select("u", "v")
   }
 
   /** Edges (u, v) of the k-truss of the undirected view of `edges`. */

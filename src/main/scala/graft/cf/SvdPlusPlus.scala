@@ -157,12 +157,7 @@ object SvdPlusPlus {
 
       val next = upd("bu", gbu).unionAll(upd("bi", gbi)).unionAll(upd("p", gp))
         .unionAll(upd("q", gq)).unionAll(upd("y", gy))
-      if (sys.env.contains("SVDPP_DEBUG")) {
-        val t = System.nanoTime()
-        state = checkpointRebased(next)
-        println(f"[svdpp-sweep] sec=${(System.nanoTime() - t) / 1e9}%.2f")
-      } else
-        state = checkpointRebased(next) // ONE action per sweep
+      state = checkpointRebased(next) // ONE action per sweep
     }
     Model(mu, rank, state)
   }

@@ -47,14 +47,21 @@ class MoreAlgosSpec extends AnyFunSuite {
   }
 
   test("k-core frontier collapses across rounds") {
-    val got = KCores.coreness(spark, edgesDf)
-    val nV = got.count()
-    val rounds = KCores.lastRoundChanged.get()
-    assert(rounds.nonEmpty && rounds.last == 0L,
+    val res = KCores.run(spark, edgesDf, maxIters = 200)
+    val nV = res.state.count()
+    val rounds = res.metrics.map(_.active)
+    assert(res.converged && rounds.nonEmpty && rounds.last == 0L,
       s"fixpoint not reached: $rounds")
     // after the first h-pass the recompute frontier must be a strict
     // minority of the graph — the delta iteration actually prunes
     assert(rounds.drop(1).forall(_ < nV), s"frontier never shrank: $rounds")
+  }
+
+  test("k-cores fails loudly when maxIters misses the fixpoint") {
+    val e = intercept[IllegalArgumentException] {
+      KCores.coreness(spark, edgesDf, maxIters = 1)
+    }
+    assert(e.getMessage.contains("maxIters"))
   }
 
   test("random walks: deterministic, bounded, land on real vertices") {
@@ -128,6 +135,17 @@ class MoreAlgosSpec extends AnyFunSuite {
     assert(got.forall { case (v, d) => d == dist(v) },
       "synchronous relaxation must reach the exact Dijkstra fixpoint")
     assert(got.size > 1 && got(src) == 0.0)
+  }
+
+  test("sssp over its round budget fails loudly and releases its edge view") {
+    edgesDf.count() // the shared cached input predates the snapshot
+    val before = TestSessions.cachedDatasetRdds(spark)
+    val e = intercept[IllegalStateException] {
+      graft.algos.GraphOps.sssp(spark, edgesDf, LinkGraph.CUST + 1L,
+        maxRounds = 1)
+    }
+    assert(e.getMessage.contains("1 rounds"))
+    assert(TestSessions.cachedDatasetRdds(spark) == before)
   }
 
   test("node2vec walks: valid edges, full length, p/q bias steers the walk") {
@@ -351,8 +369,9 @@ class MoreAlgosSpec extends AnyFunSuite {
     // -> exactly 2 rounds and 2 colors (random-priority JP needs up to 3:
     // leaves that hash below the hub wait a round for it)
     val star = (0L to 9L).map(l => (100L, l)).toDF("src", "dst")
-    val (starDf, rounds) = Coloring.run(star, 64, 42L, largestFirst = true)
-    val sc = starDf.as[(Long, Long)].collect().toMap
+    val starRes = Coloring.run(star, 64, 42L, largestFirst = true)
+    val rounds = starRes.supersteps
+    val sc = starRes.state.as[(Long, Long)].collect().toMap
     assert(rounds == 2, s"star LDF rounds = $rounds")
     assert(sc(100L) == 0L && (0L to 9L).forall(sc(_) == 1L))
     // ring of cliques: proper, Delta+1 bound (max degree 5 -> <= 6
@@ -369,7 +388,8 @@ class MoreAlgosSpec extends AnyFunSuite {
       ring.repartition(7, col("dst"))).as[(Long, Long)].collect().toMap
     assert(cols2 == cols)
     // the oracle unrolls 20 rounds — the engine must converge within that
-    val (_, ringRounds) = Coloring.run(ring, 64, 42L, largestFirst = true)
+    val ringRounds =
+      Coloring.run(ring, 64, 42L, largestFirst = true).supersteps
     assert(ringRounds <= 20, s"ring LDF rounds = $ringRounds")
   }
 
@@ -378,8 +398,9 @@ class MoreAlgosSpec extends AnyFunSuite {
     val ring = graft.core.Planted.ringOfCliques(spark, nCliques = 24, s = 5)
     val und = ring.select("src", "dst").as[(Long, Long)].collect()
       .flatMap(e => Seq(e, e.swap)).toSet
-    val (misDf, rounds) = Mis.run(ring)
-    val mis = misDf.as[(Long, Long)].collect().toMap
+    val misRes = Mis.run(ring)
+    val rounds = misRes.supersteps
+    val mis = misRes.state.as[(Long, Long)].collect().toMap
     // independence: no edge joins two MIS members
     assert(!und.exists { case (a, b) => mis.contains(a) && mis.contains(b) })
     // maximality: every non-member has a member neighbor

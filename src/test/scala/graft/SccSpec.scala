@@ -201,10 +201,13 @@ class SccSpec extends AnyFunSuite {
     val path = (0 until 300).map(i => (300L - i, 299L - i)) // descending ids
     val edges = path.toDF("src", "dst")
       .withColumn("weight", org.apache.spark.sql.functions.lit(1.0))
+    val cached = TestSessions.cachedDatasetRdds(spark)
     val e = intercept[IllegalStateException] {
       SCC.run(spark, edges, maxRounds = 500, driverFinishBelow = 0L,
         maxInnerRounds = 20)
     }
     assert(e.getMessage.contains("maxInnerRounds"))
+    // the failing fixpoint still releases the phase's cached edge views
+    assert(TestSessions.cachedDatasetRdds(spark) == cached)
   }
 }

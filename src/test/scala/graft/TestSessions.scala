@@ -16,6 +16,14 @@ object TestSessions {
     s
   }
   val Sf0001 = "/root/testdata/sf0.001"
+
+  /** Ids of the RDDs cached by `Dataset.persist`/`cache`, which Spark names
+    * after the cached plan. Local checkpoints persist their RDDs too, but
+    * unnamed, and the context cleaner releases those once unreachable.
+    */
+  def cachedDatasetRdds(spark: SparkSession): Set[Int] =
+    spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if rdd.name != null => id }.toSet
 }
 
 /** Plain-Scala reference implementations ("oracles") of the graph
